@@ -27,8 +27,6 @@ from chemharmony_spark.operators.text import fingerprint, tokens
 
 from chemharmony_spark.cache import registered_persist
 
-HEX = "0123456789abcdef"
-
 
 def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Group documents by content fingerprint; keep min id as the keeper."""
@@ -270,10 +268,6 @@ def jaccard_ge(threshold: float, n_inter: Column | str = "n_inter",
     a = F.col(na) if isinstance(na, str) else na
     b = F.col(nb) if isinstance(nb, str) else nb
     return ((a + b) > F.lit(0)) & ((q + p) * n >= p * (a + b))
-
-
-def _hex_char_value(c: Column) -> Column:
-    return F.instr(F.lit(HEX), c) - 1
 
 
 def token_hash16(word: Column) -> Column:

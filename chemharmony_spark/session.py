@@ -15,15 +15,25 @@ Scale notes (100 TB / 1000-executor design intent)
   input size; at 100 TB that is ~800k scan tasks, which Spark schedules fine.
 - Broadcast threshold stays modest (32m) — dimension tables (region, nation,
   GHS codes, smiles maps) broadcast; fact tables never do.
+- The compiled-class cache holds the engine's whole working set of
+  generated code. Spark keys it by generated source and evicts LRU at
+  ``spark.sql.codegen.cache.maxEntries`` (default 100); one operator-mix
+  pass needs ~300 classes and harmonize ~100, so at the default every
+  re-run recompiled them (Janino, then the JIT again). A batch job that is
+  re-run in one session must pay compilation once, not per pass.
+- Local defaults follow the host: ``local[<usable cores>]``, as many
+  shuffle partitions, and half the physical memory as driver heap (local
+  mode runs driver and executors in one JVM; the rest is left to the
+  Python UDF workers and the page cache). ``SPARK_GRAFT_CPUS`` /
+  ``SPARK_DRIVER_MEMORY`` and explicit arguments override them.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # Python workers unpickle our pandas_udfs by module reference, so the package
 # root must be importable in the worker too. Local mode: workers inherit the
@@ -40,6 +50,27 @@ def _ensure_worker_pythonpath() -> None:
         )
 
 
+def host_defaults(env: Mapping[str, str], cores: int,
+                  mem_bytes: int) -> tuple[int, str]:
+    """(local cores, driver heap) for a host with ``cores`` usable cores and
+    ``mem_bytes`` of physical memory: every core, and half the memory.
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEMORY`` in ``env`` win."""
+    cpus = int(env.get("SPARK_GRAFT_CPUS") or cores)
+    heap = env.get("SPARK_DRIVER_MEMORY") or f"{max(1, mem_bytes // 2**31)}g"
+    return cpus, heap
+
+
+def _host_cores() -> int:
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # platform without CPU affinity
+        return os.cpu_count() or 1
+
+
+def _host_memory_bytes() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
 def get_spark(
     app_name: str = "chemharmony_spark",
     master: str | None = None,
@@ -48,13 +79,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for columnar batch analytics.
 
-    In tests/bench this runs ``local[$SPARK_GRAFT_CPUS]``; on a cluster the
-    same configs hold — only master/memory sizing comes from spark-submit.
+    Locally this runs on every usable core (``$SPARK_GRAFT_CPUS`` if set,
+    see :func:`host_defaults`); on a cluster the same configs hold — only
+    master/memory sizing comes from spark-submit.
     """
     _ensure_worker_pythonpath()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, heap = host_defaults(os.environ, _host_cores(), _host_memory_bytes())
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    shuffle_partitions = shuffle_partitions or cpus
 
     b = (
         SparkSession.builder.appName(app_name)
@@ -79,10 +111,18 @@ def get_spark(
         # --- Python boundary: always Arrow, never row-at-a-time pickle ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # --- compile generated code once per session, not once per pass ---
+        # Spark's class cache (default 100 entries), sized with
+        # tools/codegen_census.py at sf0.001: a mix pass compiles 303-319
+        # distinct classes, a harmonize op 102, the 455-query inventory
+        # 7,172 in one session plus 535 variants on a second pass (same
+        # code, other AQE stage numbering / join side). 10,000 covers the
+        # inventory; holding it costs 244 MB of Metaspace after two passes.
+        .config("spark.sql.codegen.cache.maxEntries", "10000")
         # --- quieter, deterministic local runs ---
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", heap)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
