@@ -1,11 +1,12 @@
 """Codegen census: how much generated code a pass compiles, and what it costs.
 
-    python tools/codegen_census.py --queries mix --data /root/testdata/sf0.001
-    python tools/codegen_census.py --queries all --data /root/testdata/sf0.001 --passes 1
+    python tools/codegen_census.py --queries mix --data SF_DIR
+    python tools/codegen_census.py --queries all --data SF_DIR --passes 1
     python tools/codegen_census.py --workload operator_mix --seed 1
     python tools/codegen_census.py --workload harmonize_wide --seed 1 --max-entries 100
 
-Run from the repository root. Builds one session with the engine's
+Run from the repository root; SF_DIR is a directory of the queries'
+tables (e.g. the sf0.001 test data). Builds one session with the engine's
 defaults (``--max-entries`` overrides ``spark.sql.codegen.cache.maxEntries``
 to compare cache sizes), then runs the same work ``--passes`` times in it:
 a named set of queries from ``__spark_entry__.queries()`` (``mix`` is the
