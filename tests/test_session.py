@@ -55,11 +55,6 @@ def test_host_defaults_follow_cores_and_memory():
     assert host_defaults({"SPARK_GRAFT_CPUS": ""}, 4, 16 * gb) == (4, "8g")
 
 
-def test_explicit_arguments_win_over_host_defaults(spark):
-    # the fixture passes shuffle_partitions=8 explicitly
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-
-
 def test_warm_mix_pass_reuses_compiled_classes(spark, sf_dir):
     """A re-run in a warm session must not recompile its generated code:
     the class cache must hold a whole operator-mix pass, so a second pass

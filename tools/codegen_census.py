@@ -2,7 +2,7 @@
 
     python tools/codegen_census.py --queries mix --data SF_DIR
     python tools/codegen_census.py --queries all --data SF_DIR --passes 1
-    python tools/codegen_census.py --workload operator_mix --seed 1
+    python tools/codegen_census.py --queries mix --seed 1
     python tools/codegen_census.py --workload harmonize_wide --seed 1 --max-entries 100
 
 Run from the repository root; SF_DIR is a directory of the queries'
@@ -11,8 +11,11 @@ defaults (``--max-entries`` overrides ``spark.sql.codegen.cache.maxEntries``
 to compare cache sizes), then runs the same work ``--passes`` times in it:
 a named set of queries from ``__spark_entry__.queries()`` (``mix`` is the
 benchmark's 11-query operator mix, ``all`` the whole inventory), each
-computed to full output, or one benchmark operation (``--workload``, inputs
-generated by ``perfbench/gen.py`` from ``--seed`` into ``.perfbench_work/``).
+computed to full output, or the benchmark's harmonize operation
+(``--workload``). Inputs the benchmark generates (``perfbench/gen.py``,
+from ``--seed`` into ``.perfbench_work/``) are used for ``--workload``,
+and for ``--queries`` when no ``--data`` is given: there they are the
+benchmark's operator_mix tables.
 Prints one JSON line per pass, then a summary line:
 
 - ``classes``: classes Janino compiled during the pass, from
@@ -133,24 +136,24 @@ def main() -> int:
     what = ap.add_mutually_exclusive_group(required=True)
     what.add_argument("--queries",
                       help="'mix', 'all', or comma-separated query names")
-    what.add_argument("--workload", choices=("harmonize_wide", "operator_mix"))
-    ap.add_argument("--data", help="table directory for --queries")
-    ap.add_argument("--seed", type=int, default=1, help="input seed for --workload")
+    what.add_argument("--workload", choices=("harmonize_wide",))
+    ap.add_argument("--data", help="table directory for --queries "
+                    "(default: the benchmark's operator_mix tables)")
+    ap.add_argument("--seed", type=int, default=1,
+                    help="seed of the benchmark's generated inputs")
     ap.add_argument("--passes", type=int, default=2)
     ap.add_argument("--max-entries", type=int,
                     help="override spark.sql.codegen.cache.maxEntries")
     args = ap.parse_args()
-    if args.queries and not args.data:
-        ap.error("--queries needs --data")
 
     from chemharmony_spark.cache import release_caches
     from chemharmony_spark.session import get_spark
     from workloads import MIX
 
     work = os.path.join(os.getcwd(), ".perfbench_work")
-    if args.workload:
+    if args.workload or not args.data:
         import gen
-        args.data = gen.ensure(work, args.workload, args.seed)
+        args.data = gen.ensure(work, args.workload or "operator_mix", args.seed)
 
     conf = {"spark.driver.extraJavaOptions":
             "-XX:-UseDynamicNumberOfCompilerThreads",
@@ -167,7 +170,7 @@ def main() -> int:
         h = Harmonize(spark, Tracer(enabled=False), args.data, work)
         steps = [("harmonize", h.op)]
     else:
-        if args.workload == "operator_mix" or args.queries == "mix":
+        if args.queries == "mix":
             names = list(MIX)
         elif args.queries == "all":
             import __spark_entry__ as entry

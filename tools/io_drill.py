@@ -1,10 +1,10 @@
 """Live IO-load drill for bench.py's IO probe: does a concurrent direct-IO
 write slow the page-cache-dropped read probe enough to flag an entry?
 
-    python tools/io_drill.py [--dir DIR] [--probe-mb 64] [--load-mb 8000]
+    python tools/io_drill.py [--dir DIR]
 
 Times three quiet probes, then the worst probe taken while ``dd
-oflag=direct`` writes ``--load-mb`` to the same volume (bypassing the page
+oflag=direct`` writes 8000 MB to the same volume (bypassing the page
 cache, so the device stays busy while dd runs), and applies bench.py's
 flagging rule (``IO_DRIFT_FACTOR`` x the median). Prints the samples as
 one JSON line; exits 0 if the loaded entry is flagged, 1 if not.
@@ -38,23 +38,24 @@ from bench import (  # noqa: E402
     _settle_io,
 )
 
+PROBE_MB = 64  # a quick-to-build probe file (bench.py's default is 128)
+LOAD_MB = 8000  # enough direct-IO writing to outlast the loaded probes
+
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--dir", help="volume to probe (default: the temp dir)")
-    ap.add_argument("--probe-mb", type=int, default=64)
-    ap.add_argument("--load-mb", type=int, default=8000)
     args = ap.parse_args()
 
     with tempfile.TemporaryDirectory(dir=args.dir) as tmp:
         path = _ensure_io_probe_file(os.path.join(tmp, "probe.bin"),
-                                     mb=args.probe_mb)
+                                     mb=PROBE_MB)
         _io_probe(path)  # warmup
         probes = {name: _io_probe(path) for name in ("q01", "q12", "q30")}
         load_file = os.path.join(tmp, "load.bin")
         proc = subprocess.Popen(
             ["dd", "if=/dev/zero", f"of={load_file}", "bs=4M",
-             f"count={max(1, args.load_mb // 4)}", "oflag=direct"],
+             f"count={LOAD_MB // 4}", "oflag=direct"],
             stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
         )
         try:
