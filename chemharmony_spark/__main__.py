@@ -13,6 +13,7 @@ inject a session; ``main`` builds one via session.get_spark.
 from __future__ import annotations
 
 import argparse
+import json
 import sys
 
 
@@ -41,6 +42,9 @@ def cmd_harmonize(spark, args) -> int:
         write_parquet(df, f"{args.out}/{name}.parquet",
                       partition_by=["source"])
         print(f"wrote {args.out}/{name}.parquet (partitioned by source)")
+    # what the run did (rows per source, re-key drops, distinct shrink,
+    # UDF inputs), from the counts observed while harmonize ran
+    print(json.dumps(res.report, sort_keys=True))
     # the brick is written — the result is fully consumed, so reclaim the
     # bucket2 materialization (no-op for auto/bucket) instead of leaking a
     # nonce'd catalog table + data dir per invocation (r9)

@@ -16,7 +16,7 @@ distinct structures vs 1e10 activity rows.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
@@ -65,6 +65,7 @@ def smiles_to_inchi(smiles: pd.Series) -> pd.Series:
 def with_derived_column_deduped(
     df: DataFrame, src_col: str, out_col: str, udf_col: Column,
     broadcast: bool | None = None, universe: DataFrame | None = None,
+    observation: Observation | None = None,
 ) -> DataFrame:
     """Apply an expensive scalar UDF over *distinct* inputs, then join back.
 
@@ -89,14 +90,19 @@ def with_derived_column_deduped(
     rows can never change or drop an output row (harmonize passes the raw
     activities scan — inchi is untouched by rekey/distinct — measured
     ~2x on harmonize_e2e at sf0.1).
+
+    ``observation``: observes ``rows``, the number of distinct inputs sent
+    through the UDF, on the action that runs the mapping.
     """
     from chemharmony_spark.hints import size_gated_broadcast
 
     mapping = (
         (universe if universe is not None else df)
         .select(src_col).where(F.col(src_col).isNotNull()).distinct()
-        .withColumn(out_col, udf_col)
     )
+    if observation is not None:
+        mapping = mapping.observe(observation, F.count(F.lit(1)).alias("rows"))
+    mapping = mapping.withColumn(out_col, udf_col)
     if broadcast is None:
         mapping = size_gated_broadcast(mapping)
     elif broadcast:

@@ -142,14 +142,20 @@ def spread_scan(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     return df.repartition(want)
 
 
-def size_gated_broadcast(df: DataFrame, max_bytes: int | None = None) -> DataFrame:
+def size_gated_broadcast(df: DataFrame, max_bytes: int | None = None,
+                         estimate: DataFrame | None = None) -> DataFrame:
     """Return ``F.broadcast(df)`` only if the plan-estimated size clears the
     gate; else ``df`` unhinted (AQE decides from runtime statistics).
 
     ``max_bytes``: override the gate; default = the session's
-    autoBroadcastJoinThreshold. A non-positive gate never hints."""
+    autoBroadcastJoinThreshold. A non-positive gate never hints.
+    ``estimate``: gate on this frame's estimate instead of ``df``'s — for
+    a ``df`` no larger than ``estimate`` whose own estimate Catalyst
+    inflates (without CBO a join is sized as the product of its inputs,
+    even a 1:1 left join against a distinct mapping)."""
     if max_bytes is None:
         max_bytes = broadcast_threshold_bytes(df.sparkSession)
-    if max_bytes > 0 and plan_size_bytes(df) <= max_bytes:
+    if max_bytes > 0 and plan_size_bytes(
+            df if estimate is None else estimate) <= max_bytes:
         return F.broadcast(df)
     return df

@@ -468,28 +468,18 @@ def grouped_topk(
     order_cols: Sequence[Column],
     k: int,
     rank_col: str = "rank",
-    two_phase: bool = False,
 ) -> DataFrame:
     """Per-group top-k (row_number <= k). ``order_cols`` must be a *total*
     order (tie-broken by a unique key) for deterministic, engine-portable
     results.
 
-    ``two_phase=True`` is the low-cardinality-group scale path: a window
-    partitioned only by a handful of groups would otherwise funnel the
-    whole table through |groups| tasks. r10: the manual phase-1 pre-pass
-    (top-k within (group, spark_partition_id) — the partition id as a
-    free salt) duplicated what the planner now provides for free: a
-    ``row_number() <= k`` filter over a window plants a PARTIAL
-    WindowGroupLimit before the exchange (SPARK-37099, 3.5+), so each
-    map task already forwards at most k rows per group and the
-    post-shuffle sort sees k x map-tasks rows — the same bound phase 1
-    achieved with a SECOND full exchange and two extra sorts (the same
-    redundancy removed from stratified_sample_exact in r9; plan proof
-    plans/r10/q53_grouped_topk_{before,after}.txt: 2 Exchange + 4 Sort
-    -> 1 Exchange + 2 Sort). The flag is retained as an accepted no-op
-    for API compatibility; output is identical either way (any global
-    per-group top-k row is necessarily in its own map partition's
-    top-k), verified element-wise in tests.
+    Low-cardinality groups need no manual pre-pass: a ``row_number() <= k``
+    filter over a window plants a PARTIAL WindowGroupLimit before the
+    exchange (SPARK-37099, 3.5+), so each map task forwards at most k rows
+    per group and the post-shuffle sort sees k x map-tasks rows (plan
+    proof plans/r10/q53_grouped_topk_{before,after}.txt: a salted
+    two-phase pre-pass cost 2 Exchange + 4 Sort against 1 Exchange +
+    2 Sort).
     """
     order = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     w = Window.partitionBy(*group_cols).orderBy(*order)

@@ -23,12 +23,6 @@ class CheckResult:
     detail: str = ""
 
 
-def check_min_rows(df: DataFrame, floor: int, name: str) -> CheckResult:
-    """reference 80_harmonize.py:96-99 row floors."""
-    n = df.count()
-    return CheckResult(name, n > floor, f"rows={n} floor={floor}")
-
-
 def check_unique(df: DataFrame, col: str, name: str = "") -> CheckResult:
     """reference 80:104-105 pid uniqueness; 03_integrate_tox21.R:90-91."""
     dup = df.groupBy(col).count().where("count > 1").count()
@@ -55,40 +49,6 @@ def check_referential_integrity(activities: DataFrame, dim: DataFrame,
     """activities FKs resolve (reference 09_integrate_pubchem.py:81-82)."""
     orphans = activities.join(dim.select(key).distinct(), on=key, how="left_anti").count()
     return CheckResult(f"ri_{key}", orphans == 0, f"orphans={orphans}")
-
-
-def check_source_property_consistency(activities: DataFrame,
-                                      properties: DataFrame) -> CheckResult:
-    """reference src/tests.py:5-61: per-source distinct-pid counts match
-    between properties and activities (full outer join + coalesce)."""
-    a = activities.groupBy("source").agg(F.countDistinct("pid").alias("na"))
-    p = properties.groupBy("source").agg(F.countDistinct("pid").alias("np"))
-    bad = (
-        a.join(p, "source", "outer")
-        .where(F.coalesce("na", F.lit(0)) != F.coalesce("np", F.lit(0)))
-        .count()
-    )
-    return CheckResult("source_property_consistency", bad == 0, f"mismatched_sources={bad}")
-
-
-def check_distinct_idempotent(df: DataFrame) -> CheckResult:
-    """reference 09:74-77: table has no duplicate rows (distinct is a no-op)."""
-    n, nd = df.count(), df.distinct().count()
-    return CheckResult("distinct_idempotent", n == nd, f"rows={n} distinct={nd}")
-
-
-def check_class_balance_floor(activities: DataFrame, min_props: int = 10,
-                              min_per_class: int = 100) -> CheckResult:
-    """reference 09:63-68: enough properties with both classes populated."""
-    counts = activities.groupBy("pid", "binary_value").count()
-    ok_pids = (
-        counts.groupBy("pid")
-        .agg(F.min("count").alias("mn"), F.count(F.lit(1)).alias("nc"))
-        .where((F.col("nc") == 2) & (F.col("mn") > min_per_class))
-        .count()
-    )
-    return CheckResult("class_balance_floor", ok_pids >= min_props,
-                       f"qualifying_pids={ok_pids} floor={min_props}")
 
 
 def run_checks(*checks: CheckResult, raise_on_fail: bool = True) -> list[CheckResult]:

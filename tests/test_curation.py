@@ -73,21 +73,19 @@ def test_stopword_ratio(spark):
     assert "the" in EN_STOPWORDS
 
 
-def test_grouped_topk_two_phase_matches_one_phase(spark, sf_dir):
+def test_grouped_topk_exactly_k_per_group(spark, sf_dir):
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_totalprice",
         (F.col("o_custkey") % 5).alias("grp"),
-    ).repartition(7)  # several input partitions so phase 1 actually salts
+    ).repartition(7)  # several map partitions feed the partial group limit
     order = [F.col("o_totalprice").desc(), F.col("o_orderkey")]
-    one = grouped_topk(orders, ["grp"], order, k=4, two_phase=False)
-    two = grouped_topk(orders, ["grp"], order, k=4, two_phase=True)
-    key = ["grp", "rank", "o_orderkey"]
-    assert sorted(map(tuple, one.select(key).collect())) == \
-        sorted(map(tuple, two.select(key).collect()))
+    top = grouped_topk(orders, ["grp"], order, k=4)
     # exactly k rows per group, ranks 1..k
-    per = {r["grp"]: r["n"] for r in
-           two.groupBy("grp").agg(F.count("*").alias("n")).collect()}
-    assert all(n == 4 for n in per.values())
+    ranks: dict = {}
+    for r in top.select("grp", "rank").collect():
+        ranks.setdefault(r["grp"], []).append(r["rank"])
+    assert sorted(ranks) == list(range(5))
+    assert all(sorted(v) == [1, 2, 3, 4] for v in ranks.values())
 
 
 def test_global_cumsum_matches_single_window(spark):

@@ -329,3 +329,17 @@ def test_scan_memo_evicts_stale_and_stays_bounded(spark, tmp_path):
     # restore: drop the test's entries so later tests see a clean memo
     for k in [k for k in Q._SCAN_MEMO if k not in before]:
         del Q._SCAN_MEMO[k]
+
+
+def test_staging_path_source_resolves_once_per_path():
+    """Provenance is a property of the staged path: the last segment that
+    names a declared source, else None (an undeclared staging dir)."""
+    from chemharmony_spark.sources.readers import staging_path_source
+
+    srcs = ["srcA", "srcB"]
+    assert staging_path_source("file:/s/srcA/activities.parquet", srcs) == "srcA"
+    # the segment nearest the file wins, as element_at(..., -1) did per row
+    assert staging_path_source("file:/srcB/stage/srcA/x.parquet", srcs) == "srcA"
+    assert staging_path_source("file:/s/rogue/activities.parquet", srcs) is None
+    # whole segments only
+    assert staging_path_source("file:/s/srcAB/activities.parquet", srcs) is None

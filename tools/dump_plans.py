@@ -9,10 +9,11 @@ other work and the committed files let a reviewer audit plan-shape claims
 (Exchange count, join strategy, PushedFilters, Python eval nodes) without
 running Spark.
 
-The harmonize plans are captured with check_invariants=False: the invariant
-suite's persists would otherwise wrap the analytic plan in
-InMemoryRelation nodes and hide the compute shape being audited (the
-benched path runs the same analytic plan underneath those caches).
+The harmonize plans are captured with check_invariants=False: the checked
+call also persists and fills its three output frames and attaches its
+observed counts (CollectMetrics nodes), and its captured plan would be a
+scan of the filled cache. The unchecked plan still reads the two persisted
+dimension builds (InMemoryRelation), whose own plans are printed with it.
 """
 
 from __future__ import annotations
