@@ -13,7 +13,8 @@ Layout
                    training-data ops (dedup / similarity / text / multimodal)
 - ``sources``    : readers & writers (SURVEY.md §2.1)
 - ``plans``      : end-to-end pipelines (harmonize, integrations) (SURVEY.md §3)
-- ``streaming``  : structured-streaming surface for the events table
+
+Batch only, like the reference: there is no streaming surface.
 """
 
 __version__ = "0.1.0"

@@ -35,9 +35,8 @@ def approx_distinct(df: DataFrame, keys: Sequence[str], value_col: str,
 def cm_bucket(item, row: int, width: int):
     """Counter index of ``item`` in count-min hash row ``row``.
 
-    Shared by the batch sketch and the streaming epoch partials
-    (streaming/windows.stream_countmin_index) — the mergeable-state
-    contract requires bit-identical bucket functions on both paths."""
+    Sketches built separately merge only if they share this bucket
+    function bit for bit."""
     return F.pmod(
         F.conv(
             F.substring(F.md5(F.concat(F.lit(f"r{row}:"), item)), 1, 8),
@@ -127,8 +126,7 @@ def hll64_bucket_rho(key_col: Column | str) -> tuple[Column, Column]:
     Pure integer/string arithmetic (no engine HLL state), so the sketch
     is bit-reproducible in ANSI SQL and MERGEABLE: max(rho) per
     (group, bucket) is the whole state, and maxima combine across
-    partitions, epochs, or engines. Used by q248 and the streaming
-    incremental twin (streaming/windows.stream_hll_index)."""
+    partitions, epochs, or engines. Used by q248."""
     c = F.col(key_col) if isinstance(key_col, str) else key_col
     h = F.md5(c.cast("string"))
 

@@ -1,5 +1,2 @@
-from chemharmony_spark.plans.harmonize import (  # noqa: F401
-    harmonize,
-    harmonize_bucket2_gc,
-)
+from chemharmony_spark.plans.harmonize import harmonize  # noqa: F401
 from chemharmony_spark.plans.labeler import magentic_labels  # noqa: F401

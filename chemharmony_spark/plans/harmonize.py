@@ -12,7 +12,7 @@ Dataflow (per 80_harmonize.py):
   2. distinct (pid, data, source) first; canonicalize each distinct raw
      payload ONCE (dedup -> UDF -> join back), pid=md5  (80:37,39-40)
   3. same for substances -> sid=md5(data)               (80:48-58)
-  4. activities: scan, optional early distinct          (80:63-67)
+  4. activities: scan                                   (80:63-67)
   5. re-key activities on (source, local sid/pid)       (80:76-78)
   6. distinct, binary_value, aid=md5(sid||pid||inchi||value) (80:68,81-84)
   7. smiles from distinct inchis via deduped UDF + join back (80:71-73)
@@ -74,38 +74,11 @@ class HarmonizeInvariantError(AssertionError):
     AssertionError, so callers that caught the earlier asserts still do."""
 
 
-# per-process bucket2 invocation counter: combined with the pid it makes
-# every bucket2 materialization's table name + data path unique, so re-
-# invoking with the same bucket2_dir can never clobber a table an earlier
-# run's unconsumed lazy result still reads
-import itertools as _it
-
-_B2_COUNTER = _it.count()
-
-
-def _bucket2_n_buckets(spark) -> int:
-    """Bucket count for the bucket2 materialization: the session's shuffle
-    partitioning, falling back to defaultParallelism when the conf is
-    non-numeric (managed platforms expose values like "auto"; crashing the
-    bucket2 path before its write helps nobody)."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        return spark.sparkContext.defaultParallelism
-
-
 @dataclass
 class HarmonizeResult:
     substances: DataFrame
     properties: DataFrame
     activities: DataFrame
-    # set only by rekey_strategy='bucket2': the nonce'd catalog table the
-    # activities frame reads, and its data directory. Tracked so the caller
-    # can reclaim them (drop_bucket2) once the result is consumed — without
-    # this every bucket2 invocation leaks a metastore entry + a data dir
-    # for the session's lifetime (r8 ADVICE).
-    bucket2_table: str | None = None
-    bucket2_path: str | None = None
     # what the call did (harmonize_report), from the observed counts of
     # the checked call; None when check_invariants=False
     report: dict | None = None
@@ -113,96 +86,9 @@ class HarmonizeResult:
     def unpersist(self) -> None:
         """Release any cache the caller took on the output frames (the
         checked call's own outputs are local checkpoints, freed with the
-        frames). Frames stay usable (recompute-on-reference); the bucket2
-        materialization, which a recompute of ``activities`` would re-read,
-        is NOT touched here — call :meth:`drop_bucket2` when the result is
-        fully consumed."""
+        frames). Frames stay usable (recompute-on-reference)."""
         for frame in (self.substances, self.properties, self.activities):
             frame.unpersist()
-
-    def drop_bucket2(self) -> None:
-        """Reclaim the bucket2 materialization: drop the nonce'd catalog
-        table and delete its data directory. AFTER this the ``activities``
-        frame can no longer be recomputed (its scan reads the dropped
-        table) — call only once the result is fully consumed. No-op for
-        non-bucket2 results; idempotent."""
-        if not self.bucket2_table:
-            return
-        import shutil as _shutil
-
-        self.activities.sparkSession.sql(
-            f"DROP TABLE IF EXISTS {self.bucket2_table}"
-        )
-        if self.bucket2_path:
-            _shutil.rmtree(self.bucket2_path, ignore_errors=True)
-        self.bucket2_table = self.bucket2_path = None
-
-
-def harmonize_bucket2_gc(spark: SparkSession,
-                         bucket2_dir: str | None = None) -> list[str]:
-    """Garbage-collect stale bucket2 materializations (r8 verdict task 3).
-
-    Each ``rekey_strategy='bucket2'`` invocation owns a nonce'd catalog
-    table (``__harmonize_b2_<dirhash>_<pid>_<seq>``) for its result's
-    lifetime — correct (nothing may drop a table a lazy frame still
-    reads), but a long-lived session invoking bucket2 in a loop
-    accumulates tables and data dirs. This opt-in helper drops the
-    tables (and deletes their data dirs) that provably cannot be read
-    anymore:
-
-    * the owning PROCESS is dead (nonce pid no longer exists — no lazy
-      frame from that process can survive it), or
-    * the DATA DIR is already gone (the documented manual cleanup —
-      deleting bucket2_dir — leaves dangling catalog entries behind;
-      any read would fail regardless, r8 ADVICE).
-
-    Tables owned by the CURRENT process with live data are never touched
-    — this process's unconsumed results stay safe; use
-    :meth:`HarmonizeResult.drop_bucket2` for those. ``bucket2_dir``
-    restricts the sweep to tables created for that dir (matched by the
-    dir-hash prefix in the name); default sweeps every ``__harmonize_b2_``
-    table in the current catalog/database. Returns the dropped names.
-    """
-    import hashlib as _hashlib
-    import os as _os
-    import shutil as _shutil
-
-    prefix = "__harmonize_b2_"
-    if bucket2_dir:
-        prefix += _hashlib.md5(bucket2_dir.encode()).hexdigest()[:10] + "_"
-    dropped: list[str] = []
-    for t in spark.catalog.listTables():
-        if not t.name.startswith(prefix):
-            continue
-        parts = t.name.rsplit("_", 2)  # ..._<pid>_<seq>
-        try:
-            pid = int(parts[-2])
-        except (IndexError, ValueError):
-            continue  # not a nonce'd name we minted; leave it
-        try:
-            _os.kill(pid, 0)
-            alive = True
-        except ProcessLookupError:
-            alive = False
-        except PermissionError:  # exists, owned by another user
-            alive = True
-        # location from the catalog, normalized to a local path
-        loc = spark.sql(
-            f"DESCRIBE FORMATTED {t.name}"
-        ).where("col_name = 'Location'").collect()
-        path = loc[0].data_type if loc else None
-        if path and path.startswith("file:"):
-            path = path[5:]
-        path_gone = path is not None and not _os.path.isdir(path)
-        if alive and not path_gone:
-            # provably-readable (owner may hold a lazy frame) — includes
-            # every live table of the CURRENT process (own pid is alive)
-            continue
-        spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-        if path:
-            _shutil.rmtree(path, ignore_errors=True)
-        dropped.append(t.name)
-    return dropped
 
 
 class _Observer:
@@ -283,13 +169,10 @@ def harmonize(
     staging_root: str,
     sources: list[str],
     scratch_dir: str | None = None,
-    derive_smiles: bool = True,
     check_invariants: bool = True,
     min_rows: tuple[int, int, int] = (0, 0, 0),
-    early_activity_distinct: bool = False,
     rekey_strategy: str = "auto",
     staging_tables: dict[str, str] | None = None,
-    bucket2_dir: str | None = None,
     max_rekey_drops: int | None = None,
 ) -> HarmonizeResult:
     """Run the harmonize plan; returns the three brick DataFrames.
@@ -312,22 +195,10 @@ def harmonize(
     execute. ``'auto'`` (default): size-gated broadcast hint — attached only
     when Catalyst estimates the staged dimension under
     autoBroadcastJoinThreshold, else unhinted (AQE decides from runtime
-    stats). ``'bucket'``: the pre-bucket
-    path for corpora whose id maps outgrow broadcast — shuffle-hash joins
-    with the map as build side (no sort, no broadcast build); pair with
-    staging written bucketed by (source, sid) to drop the map-side exchange.
-    ``'bucket2'``: ``'bucket'`` plus the sid-rekeyed intermediate is
-    MATERIALIZED as a catalog table bucketed by (source, pid) (requires
-    ``bucket2_dir`` — deliberately NOT ``scratch_dir``, which is the
-    orthogonal dim-checkpoint knob and would confound any bucket-vs-
-    bucket2 measurement), so the pid re-key join ALSO reads its fact
-    side with zero exchanges — the fact table never enters an in-flight
-    shuffle in either re-key. The trade is one full write+read of the
-    fact bytes for one avoided shuffle of the same bytes; measured at
-    sf0.1 it does NOT pay on a single node (SCALE.md "bucketed
-    harmonize"), but the path exists for deployments where the
-    intermediate is reused downstream or shuffle capacity, not IO, is
-    the binding constraint.
+    stats). ``'bucket'``: the pre-bucket path for corpora whose id maps
+    outgrow broadcast — shuffle-hash joins with the map as build side (no
+    sort, no broadcast build); pair with staging written bucketed by
+    (source, sid) to drop the map-side exchange.
 
     ``staging_tables``: {'substances': name, 'properties': name,
     'activities': name} catalog tables to read INSTEAD of the provenance
@@ -339,15 +210,9 @@ def harmonize(
     output partitioning satisfies the join's required distribution
     (proven end-to-end in tests/test_bucketing.py).
     """
-    if rekey_strategy not in ("auto", "bucket", "bucket2"):
+    if rekey_strategy not in ("auto", "bucket"):
         raise ValueError(
-            f"rekey_strategy must be 'auto', 'bucket' or 'bucket2', "
-            f"got {rekey_strategy!r}"
-        )
-    if rekey_strategy == "bucket2" and not bucket2_dir:
-        raise ValueError(
-            "rekey_strategy='bucket2' materializes the sid-rekeyed "
-            "intermediate and needs bucket2_dir"
+            f"rekey_strategy must be 'auto' or 'bucket', got {rekey_strategy!r}"
         )
     if staging_tables:
         unknown = set(staging_tables) - set(BRICK_TABLES)
@@ -380,14 +245,11 @@ def harmonize(
 
     substances, properties = _dimension_outputs(subs, props, obs)
     build_activities = partial(
-        _activities, spark, acts_scan, subs, props, subs_scan, props_scan,
-        obs, early_activity_distinct, rekey_strategy, bucket2_dir,
-        derive_smiles)
+        _activities, acts_scan, subs, props, subs_scan, props_scan, obs,
+        rekey_strategy)
     if not check_invariants:
-        acts, tbl, b2_path = build_activities()
         return HarmonizeResult(substances=substances, properties=properties,
-                               activities=acts, bucket2_table=tbl,
-                               bucket2_path=b2_path)
+                               activities=build_activities())
 
     t_plan = time.perf_counter()
     # each output frame fills as an eager local checkpoint, the dimension
@@ -399,10 +261,7 @@ def harmonize(
     # action whose plan holds it, and no two concurrent actions share one.
     with ThreadPoolExecutor(max_workers=2) as pool:
         filled = [pool.submit(_fill, f) for f in (substances, properties)]
-        if rekey_strategy == "bucket2":  # its mid-plan write reads the builds
-            for f in filled:
-                f.result()
-        acts, tbl, b2_path = build_activities()
+        acts = build_activities()
         substances, properties = (f.result() for f in filled)
     t_dims = time.perf_counter()
     acts = _fill(acts)
@@ -415,8 +274,7 @@ def harmonize(
     }
     check_report(report, min_rows, max_rekey_drops)
     return HarmonizeResult(substances=substances, properties=properties,
-                           activities=acts, bucket2_table=tbl,
-                           bucket2_path=b2_path, report=report)
+                           activities=acts, report=report)
 
 
 def _fill(df: DataFrame) -> DataFrame:
@@ -453,13 +311,10 @@ def _dimension_outputs(subs: DataFrame, props: DataFrame,
     return substances, properties
 
 
-def _activities(spark: SparkSession, acts_scan: DataFrame, subs: DataFrame,
-                props: DataFrame, subs_scan: DataFrame, props_scan: DataFrame,
-                obs: _Observer, early_activity_distinct: bool,
-                rekey_strategy: str, bucket2_dir: str | None,
-                derive_smiles: bool) -> tuple[DataFrame, str | None, str | None]:
-    """Steps 4-7: the activities brick frame, plus the bucket2 table and
-    data path it reads (None unless ``rekey_strategy='bucket2'``)."""
+def _activities(acts_scan: DataFrame, subs: DataFrame, props: DataFrame,
+                subs_scan: DataFrame, props_scan: DataFrame, obs: _Observer,
+                rekey_strategy: str) -> DataFrame:
+    """Steps 4-7: the activities brick frame."""
     narrow = ["sid", "pid", "source", "inchi", "value"]
     keep = ["sid", "pid", "source", "inchi", "value", "binary_value"]
     if "numvalue" in acts_scan.columns:
@@ -468,21 +323,17 @@ def _activities(spark: SparkSession, acts_scan: DataFrame, subs: DataFrame,
     # observed on the raw scan, BEFORE the inner re-key joins: a staged
     # file whose path matches no declared source has NULL provenance here,
     # and the joins would silently drop its rows (the reference's post-hoc
-    # check at 80:100-101 has this blind spot; we close it)
+    # check at 80:100-101 has this blind spot; we close it). The reference
+    # distincts right after the scan (80:67); the final distinct after aid
+    # derivation subsumes that one (every derivation is a deterministic
+    # row-function), so its extra full shuffle is skipped
     acts = obs.on(acts_scan.select(*narrow), "activities.staged",
                   obs.rows, *obs.per_source, obs.undeclared)
-    # the reference distincts immediately after the scan (80:67); the final
-    # distinct after aid derivation subsumes it (all derivations are
-    # deterministic row-functions), so the default skips this extra full
-    # shuffle (-2 s at sf0.1). Enable for staging areas with heavy duplicate
-    # ratios, where early dedup shrinks the join input.
-    if early_activity_distinct:
-        acts = obs.on(acts.distinct(), "activities.distinct", obs.rows)
 
     # re-key: local (source, sid/pid) -> global md5 ids (80:76-78).
     sid_map = subs.select("source", F.col("sid").alias("__localsid"), "newsid").distinct()
     pid_map = props.select("source", F.col("pid").alias("__localpid"), "newpid").distinct()
-    if rekey_strategy in ("bucket", "bucket2"):
+    if rekey_strategy == "bucket":
         # pre-bucket path: both joins are shuffle-hash with the map as the
         # build side — no sort of the fact table, no broadcast build, works
         # at any map cardinality. Staging written bucketed by (source, sid)
@@ -500,45 +351,6 @@ def _activities(spark: SparkSession, acts_scan: DataFrame, subs: DataFrame,
         .drop("__localsid")
     )
     acts = obs.on(acts, "activities.sid_rekeyed", obs.rows)
-    if rekey_strategy == "bucket2":
-        # materialize the sid-rekeyed fact bucketed on the PID re-key key:
-        # the read-back scan's output partitioning satisfies the pid
-        # join's required distribution, so the fact side never enters an
-        # in-flight exchange in either re-key — the pid side is proven in
-        # tests/test_bucketing.py::test_harmonize_bucket2_pid_rekey_zero_fact_exchange,
-        # the sid side by the 'bucket' e2e test (bucket2 shares that
-        # subplan up to this write).
-        # The bucketed write itself needs no shuffle (each task fans its
-        # rows into per-bucket files). Table name and data subpath carry a
-        # per-invocation nonce ON TOP of the bucket2_dir scope: dir-scoping
-        # keeps concurrent runs with separate dirs from racing, and the
-        # nonce keeps a LATER run with the SAME dir from dropping/
-        # overwriting a table an earlier (still-lazy, unconsumed) result
-        # frame reads — each invocation owns its table for its lifetime.
-        # Lifecycle (r9): the result tracks its table + data path —
-        # HarmonizeResult.drop_bucket2() reclaims them once consumed, and
-        # harmonize_bucket2_gc() sweeps materializations whose owning
-        # process died or whose data dir was deleted out from under the
-        # catalog entry.
-        import hashlib as _hashlib
-        import os as _os
-
-        n_buckets = _bucket2_n_buckets(spark)
-        nonce = f"{_os.getpid()}_{next(_B2_COUNTER)}"
-        tbl = "__harmonize_b2_" + _hashlib.md5(
-            bucket2_dir.encode()
-        ).hexdigest()[:10] + f"_{nonce}"
-        b2_path = f"{bucket2_dir}/bucket2_sid_rekeyed_{nonce}"
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        (
-            acts.write.mode("overwrite")
-            .bucketBy(n_buckets, "source", "__localpid")
-            .option("path", b2_path)
-            .saveAsTable(tbl)
-        )
-        acts = spark.table(tbl)
-    else:
-        tbl = b2_path = None
     acts = (
         acts.join(pid_map, on=["source", "__localpid"], how="inner")
         .drop("__localpid")
@@ -552,8 +364,8 @@ def _activities(spark: SparkSession, acts_scan: DataFrame, subs: DataFrame,
     # so distinct-then-derive ≡ the reference's derive-then-distinct,
     # 80:83-84), binary_value is derived AFTER distinct too (r10: a pure
     # function of value, which IS in the distinct key, so the groups are
-    # unchanged — this drops it from the re-key joins, the bucket2
-    # write+read and this exchange; guide §2.3 "narrower types"), and
+    # unchanged — this drops it from the re-key joins and this exchange;
+    # guide §2.3 "narrower types"), and
     # smiles joins AFTER distinct (pure function of inchi, so it can't
     # split groups). Keeps ~60 bytes/row of derived strings out of the
     # biggest exchange, and the smiles broadcast build no longer gates
@@ -568,20 +380,19 @@ def _activities(spark: SparkSession, acts_scan: DataFrame, subs: DataFrame,
         .select(*keep)  # contract column order (binary_value before numvalue)
         .withColumn("aid", surrogate_aid())  # 80:83
     )
-    if derive_smiles:  # 80:71-73: dedup-before-UDF then join back
-        # universe=raw scan: inchi survives rekey+distinct unchanged, so
-        # the broadcast mapping harvests distinct inchis from the cheap
-        # scan instead of re-executing the whole join/distinct pipeline
-        acts = with_derived_column_deduped(
-            acts, "inchi", "smiles", inchi_to_smiles("inchi"),
-            universe=acts_scan, observation=obs.new("activities.smiles"),
-        )
-        # contract column order (smiles before aid, matching the reference
-        # envelope; README.md:17-25)
-        cols = [c for c in acts.columns if c not in ("aid", "smiles")]
-        acts = acts.select(*cols, "smiles", "aid")
-    acts = obs.on(acts, "activities.out", obs.rows, obs.undeclared)
-    return acts, tbl, b2_path
+    # 80:71-73: dedup-before-UDF then join back. universe=raw scan: inchi
+    # survives rekey+distinct unchanged, so the broadcast mapping harvests
+    # distinct inchis from the cheap scan instead of re-executing the whole
+    # join/distinct pipeline
+    acts = with_derived_column_deduped(
+        acts, "inchi", "smiles", inchi_to_smiles("inchi"),
+        universe=acts_scan, observation=obs.new("activities.smiles"),
+    )
+    # contract column order (smiles before aid, matching the reference
+    # envelope; README.md:17-25)
+    cols = [c for c in acts.columns if c not in ("aid", "smiles")]
+    acts = acts.select(*cols, "smiles", "aid")
+    return obs.on(acts, "activities.out", obs.rows, obs.undeclared)
 
 
 def harmonize_report(metrics: Mapping[str, Mapping | None],
@@ -611,8 +422,6 @@ def harmonize_report(metrics: Mapping[str, Mapping | None],
         return None if a is None or b is None else a - b
 
     dims = ("substances", "properties")
-    rekey_in = get("activities.distinct" if "activities.distinct" in metrics
-                   else "activities.staged")
     sid, pid, out = (get(f"activities.{n}")
                      for n in ("sid_rekeyed", "pid_rekeyed", "out"))
     return {
@@ -624,7 +433,8 @@ def harmonize_report(metrics: Mapping[str, Mapping | None],
                                "after_distinct": get(f"{t}.distinct")}
                            for t in dims},
         "payloads_canonicalized": {t: get(f"{t}.payloads") for t in dims},
-        "rekey_dropped": {"sid": minus(rekey_in, sid), "pid": minus(sid, pid)},
+        "rekey_dropped": {"sid": minus(get("activities.staged"), sid),
+                          "pid": minus(sid, pid)},
         "final_distinct": {"rows_in": pid, "rows_out": out,
                            "shrink": pid / out if pid and out else None},
         "smiles_inchis": get("activities.smiles"),

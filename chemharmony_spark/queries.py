@@ -462,8 +462,7 @@ def q27_json_extract(spark, sf):
 
 def q28_tumbling_window(spark, sf):
     """§2.12 batch-equivalent tumbling window: hourly event rollup keyed by
-    epoch-hour (portable across engines; the streaming surface uses F.window
-    over the same data — see chemharmony_spark.streaming)."""
+    epoch-hour (integer arithmetic on ts, portable across engines)."""
     ev = _events(spark, sf).withColumn(
         "hour_bucket", F.expr("ts div 3600000000000")  # integer ns -> hour
     )
@@ -475,8 +474,7 @@ def q28_tumbling_window(spark, sf):
 
 def q29_sessionize(spark, sf):
     """Stateful sessionization as a batch window plan (gap > 30 min starts a
-    new session): lag + cumulative sum — the batch twin of
-    applyInPandasWithState in the streaming surface."""
+    new session): lag + cumulative sum."""
     w_order = Window.partitionBy("user_id").orderBy("ts")
     gap_ns = F.col("ts") - F.lag("ts").over(w_order)
     is_new = F.when(gap_ns.isNull() | (gap_ns > 1_800_000_000_000), 1).otherwise(0)
@@ -2162,8 +2160,7 @@ def q104_funnel(spark, sf):
     per user, run as an F.aggregate fold over the sorted event array — the
     whole funnel costs ONE user_id shuffle + a single-row final agg,
     versus one join+agg per stage in the relational spelling. Late/out-of-
-    order events are handled by the explicit sort inside the array, the
-    same contract the streaming sessionizer (q29) gets from watermarks."""
+    order events are handled by the explicit sort inside the array."""
     ev = _events(spark, sf).withColumn("ts", F.expr("ts div 1000"))
     per_user = ev.groupBy("user_id").agg(
         F.array_sort(

@@ -27,8 +27,8 @@ def hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for ``path`` through the JVM Hadoop API — the one
     way to ask 'does this exist / what's in it' that is correct on
     s3a://, hdfs:// and file:/ alike (os.* only sees the driver's local
-    disk). Shared by the cache reads, the staging glob expansion, and
-    streaming's epoch discovery."""
+    disk). Shared by the cache reads, the staging glob expansion and
+    small-file compaction."""
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p

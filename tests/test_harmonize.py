@@ -14,7 +14,7 @@ SOURCES = ["srcA", "srcB", "srcC"]
 
 
 def _run(spark, staging_fixture):
-    return harmonize(spark, staging_fixture, SOURCES, derive_smiles=True)
+    return harmonize(spark, staging_fixture, SOURCES)
 
 
 def test_cross_source_substance_collapses_to_one_sid(spark, staging_fixture):
@@ -101,7 +101,7 @@ def test_heterogeneous_staging_schemas_keep_numvalue(spark, tmp_path):
         if extra:
             acts["numvalue"] = [42.5]
         pd.DataFrame(acts).to_parquet(d / "activities.parquet")
-    res = harmonize(spark, str(root), ["srcA", "srcB"], derive_smiles=False)
+    res = harmonize(spark, str(root), ["srcA", "srcB"])
     assert "numvalue" in res.activities.columns
     vals = {r.source: r.numvalue for r in res.activities.collect()}
     assert vals["srcB"] == 42.5 and vals["srcA"] is None

@@ -105,9 +105,27 @@ def _staged(root: str, table: str) -> pd.DataFrame:
     return pd.concat(frames, ignore_index=True)
 
 
-def test_report_matches_independent_counts(spark, staging_fixture):
-    res = harmonize(spark, staging_fixture, SOURCES)
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_report_matches_independent_counts(spark, staging_fixture, tmp_path):
+    """The same report and the same brick with the dimension builds persisted
+    (default) and with them checkpointed to parquet under ``scratch_dir``."""
+    default = harmonize(spark, staging_fixture, SOURCES)
+    _assert_report_counts(default, staging_fixture)
+    scratch = harmonize(spark, staging_fixture, SOURCES,
+                        scratch_dir=str(tmp_path / "scratch"))
+    _assert_report_counts(scratch, staging_fixture)
+    assert (tmp_path / "scratch" / "substances").is_dir()
+    assert (tmp_path / "scratch" / "properties").is_dir()
+    for table in ("substances", "properties", "activities"):
+        assert _rows(getattr(scratch, table)) == _rows(getattr(default, table))
+
+
+def _assert_report_counts(res, staging_fixture) -> None:
     rep = res.report
+    check_report(rep)
     subs, props, acts = (_staged(staging_fixture, t)
                          for t in ("substances", "properties", "activities"))
 

@@ -164,25 +164,6 @@ def test_cli_handlers(spark, sf_dir, tmp_path, capsys):
     assert sorted(map(tuple, a2.collect())) == sorted(
         map(tuple, brick_acts.collect())
     )
-    # r8 (VERDICT next-round 6): bucket2 is reachable from the CLI too —
-    # requires its materialization dir (clean usage error without it),
-    # writes the identical brick with it
-    args = parser.parse_args([
-        "harmonize", "--staging", str(staging), "--sources", "sA,sB",
-        "--out", str(tmp_path / "brick_b2"), "--rekey", "bucket2",
-    ])
-    assert args.fn(spark, args) == 2  # missing --bucket2-dir
-    assert "--bucket2-dir" in capsys.readouterr().err
-    args = parser.parse_args([
-        "harmonize", "--staging", str(staging), "--sources", "sA,sB",
-        "--out", str(tmp_path / "brick_b2"), "--rekey", "bucket2",
-        "--bucket2-dir", str(tmp_path / "b2_scratch"),
-    ])
-    assert args.fn(spark, args) == 0
-    a3 = read_brick(spark, str(tmp_path / "brick_b2"), "activities")
-    assert sorted(map(tuple, a3.collect())) == sorted(
-        map(tuple, brick_acts.collect())
-    )
     # the provenance-abort invariant fires THROUGH the CLI: a staged dir
     # missing from --sources yields NULL provenance on the raw scan and
     # harmonize aborts before writing anything

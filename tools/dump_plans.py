@@ -3,7 +3,7 @@
 Usage: python tools/dump_plans.py <tag> [suffix] [name ...]
 
 Writes plans/<tag>/<query>_<suffix>.txt (suffix defaults to "before") for
-each headline bench query plus the three harmonize entries. Plan capture is
+each headline bench query plus the two harmonize entries. Plan capture is
 driver-side only — nothing executes — so the dump is safe to run alongside
 other work and the committed files let a reviewer audit plan-shape claims
 (Exchange count, join strategy, PushedFilters, Python eval nodes) without
@@ -66,11 +66,9 @@ def main() -> None:
         print(f"wrote {name}_{suffix}.txt")
 
     staging_root = f"/tmp/chemharmony_bench_staging_sf{sf}"
-    hm = {"harmonize_e2e": {},
-          "harmonize_e2e_bucket": None,   # filled below if staging exists
-          "harmonize_e2e_bucket2": None}
+    hm = {"harmonize_e2e", "harmonize_e2e_bucket"}
     if only:
-        hm = {k: v for k, v in hm.items() if k in only}
+        hm &= only
     if hm and os.path.isdir(f"{staging_root}/src1"):
         sources = ["src0", "src1"]
         if "harmonize_e2e" in hm:
@@ -79,8 +77,7 @@ def main() -> None:
             (outdir / f"harmonize_e2e_{suffix}.txt").write_text(
                 formatted_plan(res.activities))
             print(f"wrote harmonize_e2e_{suffix}.txt")
-        want_bucket = [k for k in ("harmonize_e2e_bucket",) if k in hm]
-        if want_bucket:
+        if "harmonize_e2e_bucket" in hm:
             tables = bench._prepare_bucketed_staging(
                 spark, staging_root, sources, sf)
             res = harmonize(spark, staging_root, sources,
@@ -89,20 +86,6 @@ def main() -> None:
             (outdir / f"harmonize_e2e_bucket_{suffix}.txt").write_text(
                 formatted_plan(res.activities))
             print(f"wrote harmonize_e2e_bucket_{suffix}.txt")
-        # bucket2 materializes mid-plan (a real write); its post-write plan
-        # is the pid-join over the bucketed scan — capturing it would
-        # execute the write, so bucket2 is only dumped on explicit request
-        if "harmonize_e2e_bucket2" in only:
-            tables = bench._prepare_bucketed_staging(
-                spark, staging_root, sources, sf)
-            res = harmonize(spark, staging_root, sources,
-                            check_invariants=False,
-                            rekey_strategy="bucket2", staging_tables=tables,
-                            bucket2_dir=f"{staging_root}_b2_scratch")
-            (outdir / f"harmonize_e2e_bucket2_{suffix}.txt").write_text(
-                formatted_plan(res.activities))
-            res.drop_bucket2()
-            print(f"wrote harmonize_e2e_bucket2_{suffix}.txt")
     elif hm:
         print(f"staging {staging_root} missing; run bench once to build it "
               "— harmonize plans skipped")
